@@ -45,11 +45,15 @@ object MergeInto {
                            sets: Option[Seq[(String, String)]]) // None = DELETE
   final case class NotMatched(cond: Option[String],
                               cols: Seq[String], vals: Seq[String])
+  /** `resolve` turns an ON / AND / SET / VALUES fragment into a
+    * column; the engine supplies one that resolves graft's SQL
+    * extensions and binds parameters. */
   final case class Parsed(table: String, tAlias: String,
                           sourceIsQuery: Boolean, source: String,
                           sAlias: String,
                           onCond: String,
-                          matched: Seq[Matched], notMatched: Seq[NotMatched])
+                          matched: Seq[Matched], notMatched: Seq[NotMatched],
+                          resolve: String => Column = expr)
 
   private val headRe =
     """(?is)^MERGE\s+INTO\s+([\w.`]+)(?:\s+(?:AS\s+)?(?!USING\b)(\w+))?\s+USING\s+(.*)$""".r
@@ -232,7 +236,7 @@ object MergeInto {
       restrictTo.foldLeft(spark.table(p.table))(_.where(_))
         .withColumn("__tid", monotonically_increasing_id())
         .alias(p.tAlias)
-        .join(srcRaw.alias(p.sAlias), expr(p.onCond), "inner")
+        .join(srcRaw.alias(p.sAlias), p.resolve(p.onCond), "inner")
         .groupBy(col("__tid")).agg(count(lit(1)).as("n"))
         .where(col("n") > 1).limit(1))
 
@@ -258,13 +262,13 @@ object MergeInto {
     val src = srcRaw.withColumn("__sm", lit(true)).alias(p.sAlias)
     val tgt = tgtBase.withColumn("__tm", lit(true)).alias(p.tAlias)
 
-    val j = tgt.join(src, expr(p.onCond), "full_outer")
+    val j = tgt.join(src, p.resolve(p.onCond), "full_outer")
     val mFlag = coalesce(col("__tm"), lit(false))
     val sFlag = coalesce(col("__sm"), lit(false))
     val isMatched = mFlag && sFlag
 
     def applicable(cond: Option[String]): Column =
-      cond.map(c => coalesce(expr(c), lit(false))).getOrElse(lit(true))
+      cond.map(c => coalesce(p.resolve(c), lit(false))).getOrElse(lit(true))
 
     // first applicable clause index per row (-1 = none) — foldRight so
     // the earliest clause wins, the ANSI order
@@ -294,7 +298,7 @@ object MergeInto {
         case (acc, (Matched(_, Some(sets)), i)) =>
           sets.find(_._1.equalsIgnoreCase(c)) match {
             case Some((_, v)) =>
-              when(midx === i, expr(v).cast(dt)).otherwise(acc)
+              when(midx === i, p.resolve(v).cast(dt)).otherwise(acc)
             case None => acc
           }
         case (acc, _) => acc
@@ -304,7 +308,7 @@ object MergeInto {
           val cols = if (cl.cols.isEmpty) insertOrder else cl.cols
           val pos = cols.indexWhere(_.equalsIgnoreCase(c))
           if (pos >= 0 && pos < cl.vals.length)
-            when(nidx === i, expr(cl.vals(pos)).cast(dt)).otherwise(acc)
+            when(nidx === i, p.resolve(cl.vals(pos)).cast(dt)).otherwise(acc)
           else acc
         }
       when(mFlag, matchedCase).otherwise(insertCase).as(c)
@@ -354,12 +358,12 @@ object MergeInto {
     val insertOrder = if (declaredOrder.nonEmpty) declaredOrder else tCols
 
     def applicable(cond: Option[String]): Column =
-      cond.map(c => coalesce(expr(c), lit(false))).getOrElse(lit(true))
+      cond.map(c => coalesce(p.resolve(c), lit(false))).getOrElse(lit(true))
 
     // ---- overwrite half: affected target partitions LEFT JOIN source
     val src = srcRaw.withColumn("__sm", lit(true)).alias(p.sAlias)
     val tgt = tgtBase.where(restrictTo).alias(p.tAlias)
-    val j = tgt.join(src, expr(p.onCond), "left_outer")
+    val j = tgt.join(src, p.resolve(p.onCond), "left_outer")
     val isMatched = coalesce(col("__sm"), lit(false))
     val midx = when(isMatched,
       p.matched.zipWithIndex.foldRight(lit(-1): Column) {
@@ -376,7 +380,7 @@ object MergeInto {
         case (acc, (Matched(_, Some(sets)), i)) =>
           sets.find(_._1.equalsIgnoreCase(c)) match {
             case Some((_, v)) =>
-              when(midx === i, expr(v).cast(dt)).otherwise(acc)
+              when(midx === i, p.resolve(v).cast(dt)).otherwise(acc)
             case None => acc
           }
         case (acc, _) => acc
@@ -406,7 +410,7 @@ object MergeInto {
     // partitions: a source row matching ANY target row made that
     // row's partition affected, so anti-vs-affected == anti-vs-full.
     val srcAnti = srcRaw.alias(p.sAlias)
-      .join(tgtBase.where(restrictTo).alias(p.tAlias), expr(p.onCond),
+      .join(tgtBase.where(restrictTo).alias(p.tAlias), p.resolve(p.onCond),
         "left_anti")
     val nidx = p.notMatched.zipWithIndex.foldRight(lit(-1): Column) {
       case ((cl, i), acc) => when(applicable(cl.cond), lit(i)).otherwise(acc)
@@ -418,7 +422,7 @@ object MergeInto {
           val cols = if (cl.cols.isEmpty) insertOrder else cl.cols
           val pos = cols.indexWhere(_.equalsIgnoreCase(c))
           if (pos >= 0 && pos < cl.vals.length)
-            when(col("__nidx") === i, expr(cl.vals(pos)).cast(dt)).otherwise(acc)
+            when(col("__nidx") === i, p.resolve(cl.vals(pos)).cast(dt)).otherwise(acc)
           else acc
         }.as(c)
     }

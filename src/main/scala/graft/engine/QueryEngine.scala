@@ -1,7 +1,11 @@
 package graft.engine
 
 import scala.util.matching.Regex
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{NamedParameter, RelationTimeTravel, UnresolvedAlias, UnresolvedAttribute, UnresolvedFunction, UnresolvedRelation, UnresolvedTableValuedFunction}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, NamedExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Command, DeleteFromTable, InsertIntoDir, InsertIntoStatement, LocalRelation, LogicalPlan, Project, SubqueryAlias, UnresolvedWith, UpdateTable}
+import org.apache.spark.sql.execution.command.ExplainCommand
 import org.apache.spark.sql.functions._
 import graft.types.IcebergTypes
 
@@ -10,13 +14,16 @@ import graft.types.IcebergTypes
   * 119-144 routing, :253-330 + :913-1022 SHOW layouts, :56-64 keyword
   * blocklist, duckdb/engine.go:395-400 result cap).
   *
-  * Spark SQL replaces the DuckDB delegate wholesale: SELECT/INSERT/
-  * EXPLAIN go to `spark.sql` (Catalyst optimizes; we never hand-plan),
-  * DDL goes through the ranger dialect translator, SHOW statements are
-  * served from the Spark catalog but re-shaped to the reference's
-  * column layouts. UPDATE/DELETE are copy-on-write rewrites (the
-  * reference delegates row-level ops to DuckDB; Iceberg v2 would give
-  * them natively — parquet tables get the same semantics by rewrite).
+  * Spark SQL replaces the DuckDB delegate wholesale: each statement is
+  * parsed once by Spark's parser, graft's SQL extensions are resolved
+  * as plan rewrites, and SELECT/INSERT/EXPLAIN run as that plan
+  * (Catalyst optimizes; we never hand-plan). DDL goes through the
+  * ranger dialect translator, SHOW statements are served from the
+  * Spark catalog but re-shaped to the reference's column layouts.
+  * UPDATE/DELETE are copy-on-write rewrites driven by the parsed
+  * node's assignments and condition (the reference delegates row-level
+  * ops to DuckDB; Iceberg v2 would give them natively — parquet tables
+  * get the same semantics by rewrite).
   */
 object QueryEngine {
   /** Per-table read-write lock. WRITE side: concurrent INSERTs into
@@ -189,16 +196,17 @@ final class QueryEngine(val spark: SparkSession,
     "GRANT", "REVOKE", "BEGIN", "COMMIT", "ROLLBACK", "DECLARE", "OPEN",
     "FETCH", "CLOSE")
 
-  def execute(sql: String): QueryResult = execute(sql, _ => ())
-
-  /** As [[execute]], but reports the assigned query id before the
-    * statement runs — protocol servers hook progress listeners onto
-    * the id's Spark job group. */
-  def execute(sql: String, onStart: String => Unit): QueryResult = {
+  /** Runs one statement. `params` binds named `:name` markers as typed
+    * literals (the pgwire Bind path): a bound value never becomes
+    * statement text, so it cannot change the statement's structure.
+    * `onStart` receives the assigned query id before the statement
+    * runs — protocol servers hook progress listeners onto the id's
+    * Spark job group. */
+  def execute(sql: String, onStart: String => Unit = _ => (),
+              params: Map[String, Any] = Map.empty): QueryResult = {
     val info = executions.register(sql)
     onStart(info.id)
-    executions.run(info)(route(rewriteIcebergScans(rewriteIndexProbes(
-      rewriteSysFuncs(sql.trim.stripSuffix(";").trim))), info.id))
+    executions.run(info)(route(prepare(sql, params), info.id))
   }
 
   /** SELECT-family statements streamed through `sink` with bounded
@@ -210,78 +218,187 @@ final class QueryEngine(val spark: SparkSession,
     * statements run exactly like [[execute]] and the sink is not
     * called. For streamed results `data` stays empty; `rowCount` and
     * the truncation message are still populated. */
-  def executeStreamed(sql0: String, onStart: String => Unit = _ => ())
+  def executeStreamed(sql: String, onStart: String => Unit = _ => ())
                      (sink: (Seq[String], Iterator[Seq[Any]]) => Unit): QueryResult = {
-    val sql = rewriteIcebergScans(rewriteIndexProbes(rewriteSysFuncs(
-      sql0.trim.stripSuffix(";").trim)))
-    if (!Set("SELECT", "WITH", "VALUES", "TABLE").contains(head(sql)))
-      execute(sql0, onStart)
-    else {
-      val info = executions.register(sql0)
-      onStart(info.id)
-      executions.run(info) {
-        var rewritten = rewriteTimeTravel(sql)
-        if (SystemTables.isSystemQuery(rewritten)) {
-          SystemTables.register(spark)
-          registerSystemQueries()
-          rewritten = rewriteSystemNames(rewritten)
-        }
-        // statement-level coherence for the streamed path too: hold
-        // the referenced tables' READ locks while refreshing and
-        // PLANNING, so the cursor never starts from a listing taken
-        // inside a commit window. The locks are released before
-        // iteration — a cursor is client-paced and must not block
-        // writers indefinitely, so (as with any cursor without MVCC
-        // snapshots) a commit racing an IN-FLIGHT stream can still
-        // fail it; re-issue the statement.
-        val df = {
-          val tables = if (SystemTables.isSystemQuery(rewritten)) Nil
-                       else referencedTables(rewritten)
-          withReadLocks(tables) {
-            tables.foreach(ensureFreshListing)
-            val d = spark.sql(rewritten)
-            pinScanListings(d.queryExecution.executedPlan)
-            d
+    val info = executions.register(sql)
+    onStart(info.id)
+    executions.run(info) {
+      val stmt = prepare(sql, Map.empty)
+      stmt.plan match {
+        case Right(q) if isQuery(stmt.sql, q) =>
+          // statement-level coherence for the streamed path too: hold
+          // the referenced tables' READ locks while refreshing and
+          // PLANNING, so the cursor never starts from a listing taken
+          // inside a commit window. The locks are released before
+          // iteration — a cursor is client-paced and must not block
+          // writers indefinitely, so (as with any cursor without MVCC
+          // snapshots) a commit racing an IN-FLIGHT stream can still
+          // fail it; re-issue the statement.
+          val df = planCoherently(q, if (stmt.system) Nil else referencedTables(q))
+          val cols = df.columns.toSeq
+          import scala.jdk.CollectionConverters._
+          val rows = df.toLocalIterator().asScala
+          var n = 0L
+          val capped: Iterator[Seq[Any]] = new Iterator[Seq[Any]] {
+            def hasNext: Boolean = n < maxResultRows && rows.hasNext
+            def next(): Seq[Any] = { n += 1; rows.next().toSeq }
           }
-        }
-        val cols = df.columns.toSeq
-        import scala.jdk.CollectionConverters._
-        val rows = df.toLocalIterator().asScala
-        var n = 0L
-        val capped: Iterator[Seq[Any]] = new Iterator[Seq[Any]] {
-          def hasNext: Boolean = n < maxResultRows && rows.hasNext
-          def next(): Seq[Any] = { n += 1; rows.next().toSeq }
-        }
-        sink(cols, capped)
-        val truncated = n >= maxResultRows && rows.hasNext
-        QueryResult(info.id, cols, Seq.empty, n,
-          if (truncated) s"result truncated to $maxResultRows rows" else "")
+          sink(cols, capped)
+          val truncated = n >= maxResultRows && rows.hasNext
+          QueryResult(info.id, cols, Seq.empty, n,
+            if (truncated) s"result truncated to $maxResultRows rows" else "")
+        case _ => route(stmt, info.id)
       }
     }
   }
 
-  /** Ranger system functions (parser.go:101-104, cases :5741-5747) →
-    * Spark built-ins. SYS_TIME matches the reference's HH:mm:ss text.
-    * The reference resolves these in its parser, so a SYS_DATE inside
-    * a string literal is data, not a function — the rewrite therefore
-    * skips single-quoted segments ('' is the escape) instead of
-    * regexing blindly over the whole text. */
-  private def rewriteSysFuncs(sql: String): String =
-    mapOutsideQuotes(sql) { s =>
-      s.replaceAll("(?i)\\bSYS_DATE\\b(\\(\\))?", "current_date()")
-        .replaceAll("(?i)\\bSYS_TIMESTAMP\\b(\\(\\))?", "current_timestamp()")
-        .replaceAll("(?i)\\bSYS_TIME\\b(\\(\\))?",
-          "date_format(current_timestamp(), 'HH:mm:ss')")
-        .replaceAll("(?i)\\bGENERATE_UUID\\b(\\(\\))?", "uuid()")
+  /** SELECT-family statement → DataFrame with graft's SQL extensions
+    * resolved — the programmatic face of the SQL surface for callers
+    * that want the PLAN, not collected rows (SparkEntry's oracle-gated
+    * queries ride it so the resolution machinery itself sits inside
+    * the gate). */
+  def selectDataFrame(sql: String): DataFrame =
+    GraftBridge.ofRows(spark, queryPlan(sql, Map.empty))
+
+  /** One statement, parsed once by Spark's parser: its plan with
+    * graft's SQL extensions resolved, or the parse error for text
+    * Spark's grammar rejects (the ranger dialect the keyword router
+    * serves). `system` is set when the statement reads a system view;
+    * [[prepare]] has then registered the system views. `params` are
+    * kept for MERGE, whose fragments bind them when it runs. */
+  private final case class Prepared(sql: String,
+                                    plan: Either[Exception, LogicalPlan],
+                                    system: Boolean,
+                                    params: Map[String, Any])
+
+  /** The per-statement prepare step: blocklist gate, one `parsePlan`,
+    * then one pass over the plan and its subqueries (CTE definitions
+    * and an EXPLAIN's plan are fields, not children, so they are
+    * reached explicitly) that resolves graft's extensions as plan
+    * rewrites:
+    *   - `t VERSION AS OF n` → the archived snapshot's plan
+    *     ([[Snapshots.read]]);
+    *   - `INDEX_PROBE(...)` / `ICEBERG_SCAN(...)` in FROM position →
+    *     the index face's / [[graft.sources.IcebergStatic]]'s plan;
+    *   - `system.<view>` → the registered `system_<view>`;
+    *   - SYS_DATE / SYS_TIME / SYS_TIMESTAMP / GENERATE_UUID and
+    *     `:name` parameter markers → [[bind]].
+    * The rewrites act on plan nodes, so text inside a string literal is
+    * data, and no read but a system-view read registers session state
+    * (temp views). */
+  private def prepare(sql0: String, params: Map[String, Any]): Prepared = {
+    val sql = sql0.trim.stripSuffix(";").trim
+    head(sql) match {
+      case h if blockedKeywords.contains(h) =>
+        throw new IllegalArgumentException(s"statement type '$h' is not allowed")
+      case h if unsupportedHeads.contains(h) =>
+        throw new IllegalArgumentException("unsupported statement type")
+      case _ => ()
     }
+    val parsed =
+      try spark.sessionState.sqlParser.parsePlan(sql)
+      catch { case e: Exception => return Prepared(sql, Left(e), system = false, params) }
+    var system = false
+    def resolve(plan: LogicalPlan): LogicalPlan = plan.transformUpWithSubqueries {
+      case node =>
+        val n = node match {
+          case w: UnresolvedWith =>
+            w.copy(cteRelations = w.cteRelations.map { case (name, q, depth) =>
+              (name, resolve(q).asInstanceOf[SubqueryAlias], depth) })
+          case RelationTimeTravel(r: UnresolvedRelation, None, Some(v))
+              if v.toLongOption.isDefined =>
+            SubqueryAlias(r.multipartIdentifier.last, GraftBridge.plan(
+              Snapshots.read(spark, r.multipartIdentifier.mkString("."), v.toLong)))
+          case f: UnresolvedTableValuedFunction =>
+            // arguments are bound first: a `$n` search term or k
+            // arrives as a parameter marker
+            def args = f.functionArgs.map(a => tvfArg(bind(a, params)))
+            f.name.map(_.toUpperCase) match {
+              case Seq("INDEX_PROBE") => GraftBridge.plan(indexProbe(args))
+              case Seq("ICEBERG_SCAN") => GraftBridge.plan(icebergScan(args))
+              case _ => f
+            }
+          case r: UnresolvedRelation =>
+            r.multipartIdentifier.map(_.toLowerCase) match {
+              case Seq("system", v) if SystemTables.views(v) =>
+                system = true
+                r.copy(multipartIdentifier = Seq(s"system_$v"))
+              case Seq(v) if v.startsWith("system_") &&
+                  SystemTables.views(v.stripPrefix("system_")) =>
+                system = true
+                r
+              case _ => r
+            }
+          // a bare SYS_DATE in a select list is a named attribute; its
+          // replacement is not, so it gets the alias the parser gives
+          // any unnamed select item
+          case p: Project => p.copy(projectList = p.projectList.map(sysFuncItem))
+          case a: Aggregate =>
+            a.copy(aggregateExpressions = a.aggregateExpressions.map(sysFuncItem))
+          case other => other
+        }
+        n.mapExpressions(bind(_, params))
+    }
+    val plan = parsed match {
+      case e: ExplainCommand => e.copy(logicalPlan = resolve(e.logicalPlan))
+      case p => resolve(p)
+    }
+    if (system) registerSystemViews()
+    Prepared(sql, Right(plan), system, params)
+  }
+
+  /** A query's resolved plan; a statement Spark's grammar rejects
+    * throws its parse error. */
+  private def queryPlan(sql: String, params: Map[String, Any]): LogicalPlan =
+    prepare(sql, params).plan.fold(e => throw e, identity)
+
+  /** SYS_DATE / SYS_TIME / SYS_TIMESTAMP / GENERATE_UUID → the Spark
+    * built-ins; `:name` markers → typed literals from `params` (the
+    * pgwire Bind path: a bound value never becomes statement text). */
+  private def bind(e: Expression, params: Map[String, Any]): Expression = e.transformUp {
+    case SysFunc(f) => f
+    case NamedParameter(name) if params.contains(name) => Literal(params(name))
+  }
+
+  /** Ranger system functions (parser.go:101-104, cases :5741-5747),
+    * bare or called without arguments → Spark built-ins. SYS_TIME
+    * matches the reference's HH:mm:ss text. */
+  private object SysFunc {
+    private def fn(name: String, args: Expression*): Expression =
+      UnresolvedFunction(Seq(name), args, isDistinct = false)
+    private val builtins: Map[String, Expression] = Map(
+      "SYS_DATE" -> fn("current_date"),
+      "SYS_TIMESTAMP" -> fn("current_timestamp"),
+      "SYS_TIME" -> fn("date_format", fn("current_timestamp"), Literal("HH:mm:ss")),
+      "GENERATE_UUID" -> fn("uuid"))
+    def unapply(e: Expression): Option[Expression] = e match {
+      case UnresolvedAttribute(Seq(n)) => builtins.get(n.toUpperCase)
+      case f: UnresolvedFunction if f.nameParts.length == 1 && f.arguments.isEmpty =>
+        builtins.get(f.nameParts.head.toUpperCase)
+      case _ => None
+    }
+  }
+
+  private def sysFuncItem(e: NamedExpression): NamedExpression = e match {
+    case SysFunc(f) => UnresolvedAlias(f)
+    case other => other
+  }
+
+  /** An INDEX_PROBE / ICEBERG_SCAN argument: a literal, or a bare or
+    * dotted name (table and column arguments). */
+  private def tvfArg(e: Expression): String = e match {
+    case Literal(v, _) if v != null => v.toString
+    case a: UnresolvedAttribute => a.nameParts.mkString(".")
+    case other => throw new IllegalArgumentException(
+      s"table function arguments must be literals or names, got $other")
+  }
 
   /** SQL statement face for the persisted-index probes (r10 verdict
-    * "Next #5"): an `INDEX_PROBE(...)` table function in FROM position
-    * is rewritten to a temp view over the engine's index-aware
-    * analytic faces, so protocol clients (HTTP / pg-wire / native /
-    * REPL) reach the indexes with SQL text alone — the way every
-    * reference query arrives (server/query/engine.go:108). Because the
-    * result is an ordinary view reference, the probe composes with any
+    * "Next #5"): `INDEX_PROBE(...)` in FROM position becomes the plan
+    * of the engine's index-aware analytic face, so protocol clients
+    * (HTTP / pg-wire / native / REPL) reach the indexes with SQL text
+    * alone — the way every reference query arrives
+    * (server/query/engine.go:108). The probe composes with any
     * surrounding SELECT (WHERE / JOIN / ORDER BY / EXPLAIN).
     *
     * Forms (args may be bare identifiers or 'quoted'):
@@ -294,64 +411,10 @@ final class QueryEngine(val spark: SparkSession,
     *
     * Each face falls back to the identical scan-path computation when
     * no matching fresh index exists — same answer, no index required. */
-  /** `ICEBERG_SCAN('<table dir>')` in FROM position — a static read
-    * of any Iceberg table directory ([[graft.sources.IcebergStatic]]:
-    * graft's own mirror OR a reference-written layout), registered as
-    * a per-path temp view. The rewrite is textual like INDEX_PROBE's:
-    * quote-aware, recursing so several scans in one statement work. */
-  private def rewriteIcebergScans(sql: String): String = {
-    if (!sql.toUpperCase.contains("ICEBERG_SCAN")) return sql
-    val m =
-      """(?i)\bICEBERG_SCAN\s*\(\s*'((?:[^']|'')*)'\s*(?:,\s*(\d+)\s*)?\)""".r
-        .findAllMatchIn(sql)
-        .find(mm => sql.substring(0, mm.start).count(_ == '\'') % 2 == 0)
-        .getOrElse(return sql)
-    val dir = m.group(1).replace("''", "'")
-    val snapId = Option(m.group(2)).map(_.toLong)
-    val view = "graft_iceberg_" + java.security.MessageDigest
-      .getInstance("MD5").digest(
-        (dir + snapId.fold("")("@" + _)).getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    graft.sources.IcebergStatic.read(spark, dir, snapId)
-      .createOrReplaceTempView(view)
-    rewriteIcebergScans(
-      sql.substring(0, m.start) + view + sql.substring(m.end))
-  }
-
-  private def rewriteIndexProbes(sql: String): String = {
-    if (!sql.toUpperCase.contains("INDEX_PROBE")) return sql
-    // only a match OUTSIDE string literals is a probe call (an odd
-    // number of quotes before it means it sits inside one)
-    val m = """(?i)\bINDEX_PROBE\s*\(""".r.findAllMatchIn(sql)
-      .find(mm => sql.substring(0, mm.start).count(_ == '\'') % 2 == 0)
-      .getOrElse(return sql)
-    // scan to the matching ')' respecting single-quoted literals
-    var i = m.end
-    var depth = 1
-    val n = sql.length
-    while (i < n && depth > 0) {
-      sql.charAt(i) match {
-        case '\'' =>
-          i += 1
-          while (i < n && (sql.charAt(i) != '\'' ||
-            (i + 1 < n && sql.charAt(i + 1) == '\''))) {
-            if (sql.charAt(i) == '\'') i += 2 else i += 1
-          }
-          i += 1
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
-        case _ => i += 1
-      }
-    }
-    require(depth == 0, "INDEX_PROBE: unbalanced parentheses")
-    val argStr = sql.substring(m.end, i - 1)
-    val args = splitTopLevelArgs(argStr).map(stripArg)
+  private def indexProbe(args: Seq[String]): DataFrame = {
     require(args.length >= 2,
       "INDEX_PROBE needs at least (table, kind)")
-    val view = "graft_probe_" + java.security.MessageDigest
-      .getInstance("MD5").digest(argStr.getBytes("UTF-8"))
-      .take(6).map("%02x".format(_)).mkString
-    val df = args(1).toLowerCase match {
+    args(1).toLowerCase match {
       case "neardup" =>
         require(args.length == 4,
           "INDEX_PROBE(t, 'neardup', keyCol, textCol)")
@@ -374,95 +437,68 @@ final class QueryEngine(val spark: SparkSession,
       case other => throw new IllegalArgumentException(
         s"INDEX_PROBE kind '$other' (expected neardup, bm25 or ann)")
     }
-    df.createOrReplaceTempView(view)
-    // recurse: several probes may appear in one statement
-    rewriteIndexProbes(sql.substring(0, m.start) + view + sql.substring(i))
   }
 
-  /** Top-level comma split of an argument list, ignoring commas inside
-    * single-quoted literals and nested parens. */
-  private def splitTopLevelArgs(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var inQ = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inQ) {
-        cur.append(c)
-        if (c == '\'') {
-          if (i + 1 < s.length && s.charAt(i + 1) == '\'') {
-            cur.append('\''); i += 1
-          } else inQ = false
-        }
-      } else c match {
-        case '\'' => inQ = true; cur.append(c)
-        case '(' => depth += 1; cur.append(c)
-        case ')' => depth -= 1; cur.append(c)
-        case ',' if depth == 0 => out += cur.toString; cur.clear()
-        case _ => cur.append(c)
-      }
-      i += 1
-    }
-    if (cur.nonEmpty) out += cur.toString
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
-
-  /** An INDEX_PROBE argument: 'quoted' (with '' escape), `backticked`,
-    * or a bare token. */
-  private def stripArg(a: String): String =
-    if (a.length >= 2 && a.head == '\'' && a.last == '\'')
-      a.substring(1, a.length - 1).replace("''", "'")
-    else a.replace("`", "")
-
-  /** SELECT-family statement → DataFrame with the engine's statement
-    * rewrites applied (sys functions, INDEX_PROBE, time travel) — the
-    * programmatic face of the SQL surface for callers that want the
-    * PLAN, not collected rows (SparkEntry's oracle-gated queries ride
-    * it so the rewrite machinery itself sits inside the gate). */
-  def selectDataFrame(sql: String): DataFrame =
-    spark.sql(rewriteTimeTravel(rewriteIndexProbes(rewriteSysFuncs(
-      sql.trim.stripSuffix(";").trim))))
-
-  /** Apply `f` to the segments of `sql` OUTSIDE single-quoted string
-    * literals ('' is the escape) — shared by the sys-function and
-    * time-travel rewrites so neither ever touches literal text. */
-  private def mapOutsideQuotes(sql: String)(f: String => String): String = {
-    val out = new StringBuilder
-    var i = 0
-    val n = sql.length
-    while (i < n) {
-      if (sql.charAt(i) == '\'') {
-        var j = i + 1
-        var closed = false
-        while (j < n && !closed) {
-          if (sql.charAt(j) == '\'') {
-            if (j + 1 < n && sql.charAt(j + 1) == '\'') j += 2 // '' escape
-            else { j += 1; closed = true }
-          } else j += 1
-        }
-        out.append(sql.substring(i, j))
-        i = j
-      } else {
-        val j = sql.indexOf('\'', i) match { case -1 => n; case k => k }
-        out.append(f(sql.substring(i, j)))
-        i = j
-      }
-    }
-    out.toString
+  /** `ICEBERG_SCAN('<table dir>'[, snapshotId])` in FROM position — a
+    * static read of any Iceberg table directory
+    * ([[graft.sources.IcebergStatic]]: graft's own mirror OR a
+    * reference-written layout). */
+  private def icebergScan(args: Seq[String]): DataFrame = {
+    require(args.length == 1 || args.length == 2,
+      "ICEBERG_SCAN('<table dir>'[, snapshotId])")
+    graft.sources.IcebergStatic.read(spark, args(0), args.lift(1).map(_.toLong))
   }
 
   private def head(sql: String): String =
     sql.split("\\s+", 2).headOption.getOrElse("").toUpperCase
 
-  private def route(sql: String, id: String): QueryResult = head(sql) match {
-    case h if blockedKeywords.contains(h) =>
-      throw new IllegalArgumentException(s"statement type '$h' is not allowed")
-    case h if unsupportedHeads.contains(h) =>
-      throw new IllegalArgumentException("unsupported statement type")
-    case "SELECT" | "WITH" | "VALUES" | "TABLE" => runSelect(sql, id)
-    case "EXPLAIN" => runExplain(sql, id)
+  /** A read: a SELECT / WITH / VALUES / TABLE statement whose plan
+    * holds no write or command node (`WITH ... INSERT`, `EXECUTE
+    * IMMEDIATE` and the like are not reads). */
+  private def isQuery(sql: String, plan: LogicalPlan): Boolean =
+    queryHeads.contains(head(sql)) && !plan.exists {
+      case _: Command | _: InsertIntoStatement | _: InsertIntoDir => true
+      case _ => false
+    }
+
+  private val queryHeads = Set("SELECT", "WITH", "VALUES", "TABLE")
+
+  /** Statements whose parse error is the answer; other text Spark's
+    * grammar rejects goes to the dialect router. */
+  private val parsedHeads = queryHeads ++ Set("INSERT", "UPDATE", "DELETE", "EXPLAIN")
+
+  private val explainSkippingRe: Regex = """(?is)^EXPLAIN\s+SKIPPING\s+(.*)$""".r
+
+  /** Routes on the parsed node: queries, EXPLAIN, INSERT, UPDATE and
+    * DELETE take their parts from the plan; MERGE runs on its own
+    * parser with the statement's parameters. Everything else — the
+    * ranger dialect and the catalog statements graft reshapes to the
+    * reference's layouts — goes to the keyword router, which takes no
+    * parameters. */
+  private def route(stmt: Prepared, id: String): QueryResult =
+    stmt.plan match {
+      case Right(i: InsertIntoStatement) => runInsert(i, id)
+      // the CTEs scope the inserted query
+      case Right(UnresolvedWith(i: InsertIntoStatement, ctes, rec)) =>
+        runInsert(i.copy(query = UnresolvedWith(i.query, ctes, rec)), id)
+      // writes files outside any table, the COPY ... TO of Spark's grammar
+      case Right(_: InsertIntoDir) =>
+        throw new IllegalArgumentException("statement type 'INSERT ... DIRECTORY' is not allowed")
+      case Right(u: UpdateTable) => runUpdate(u, id)
+      case Right(d: DeleteFromTable) => runDelete(d, id)
+      case Right(e: ExplainCommand) => toResult(id, GraftBridge.ofRows(spark, e))
+      case Right(q) if isQuery(stmt.sql, q) => runSelect(q, stmt.system, id)
+      case Left(_) if explainSkippingRe.matches(stmt.sql) =>
+        val explainSkippingRe(sel) = stmt.sql
+        runExplainSkipping(sel, id)
+      case Left(e) if parsedHeads.contains(head(stmt.sql)) => throw e
+      case _ if head(stmt.sql) == "MERGE" => runMerge(stmt.sql, stmt.params, id)
+      case _ if stmt.params.nonEmpty => throw new IllegalArgumentException(
+        s"parameters are not supported in ${head(stmt.sql)} statements")
+      case _ => routeDialect(stmt.sql, id)
+    }
+
+  private def routeDialect(sql: String, id: String): QueryResult = head(sql) match {
     case "SHOW" => runShow(sql, id)
     case "DESCRIBE" | "DESC" =>
       // bare DESCRIBE <table> gets the reference's SHOW COLUMNS layout;
@@ -476,7 +512,7 @@ final class QueryEngine(val spark: SparkSession,
       (ext, bare) match {
         case (Some(t), _) => describeExtended(t.group(1).replace("`", ""), id)
         case (_, Some(t)) => showColumns(t.group(1).replace("`", ""), id)
-        case _ => runSelect(sql, id)
+        case _ => toResult(id, spark.sql(sql))
       }
     case "USE" =>
       spark.sql(sql)
@@ -610,10 +646,6 @@ final class QueryEngine(val spark: SparkSession,
           } catch { case _: Exception => () }
       }
       altered
-    case "INSERT" => runInsert(sql, id)
-    case "UPDATE" => runUpdate(sql, id)
-    case "DELETE" => runDelete(sql, id)
-    case "MERGE" => runMerge(sql, id)
     case "OPTIMIZE" => runOptimize(sql, id)
     case "RESTORE" => runRestore(sql, id)
     case _ =>
@@ -925,11 +957,13 @@ final class QueryEngine(val spark: SparkSession,
       data.length, message)
   }
 
-  /** `system_queries`: the execution registry as a relation — the
-    * query-lifecycle list/stats API (execution_manager.go:13-245)
-    * exposed the same way the other system views are. */
-  private def registerSystemQueries(): Unit = {
+  /** Registers the system views: the catalog views
+    * ([[SystemTables.register]]) and `system_queries`, the execution
+    * registry as a relation — the query-lifecycle list/stats API
+    * (execution_manager.go:13-245) exposed the same way. */
+  private def registerSystemViews(): Unit = {
     import org.apache.spark.sql.types._
+    SystemTables.register(spark)
     val rows = executions.list().map(q =>
       Row(q.id, q.sql, q.status.toString, q.elapsedSec, q.error.orNull))
     spark.createDataFrame(
@@ -943,45 +977,14 @@ final class QueryEngine(val spark: SparkSession,
       .createOrReplaceTempView("system_queries")
   }
 
-  private val versionAsOfRe: Regex =
-    """(?is)\bFROM\s+([\w.`]+)\s+VERSION\s+AS\s+OF\s+(\d+)""".r
-
-  /** `FROM t VERSION AS OF n` reads the archived snapshot (the
-    * Iceberg time-travel surface over the no-jar snapshot store).
-    * Quote-aware: `VERSION AS OF` inside a string literal is data and
-    * must neither be rewritten nor trigger a snapshot read. */
-  private def rewriteTimeTravel(sql: String): String =
-    mapOutsideQuotes(sql) { seg =>
-      versionAsOfRe.replaceAllIn(seg, m => {
-        val t = m.group(1).replace("`", "")
-        val snapId = m.group(2).toLong
-        val view = s"${t.replace('.', '_')}__v$snapId"
-        Snapshots.read(spark, t, snapId).createOrReplaceTempView(view)
-        Regex.quoteReplacement(s"FROM $view")
-      })
-    }
-
-  /** The reference addresses its system views as `system.<view>`
-    * (system_database_test.go:199-204); Spark temp views cannot carry
-    * the qualifier, so the dotted spelling rewrites (quote-aware) to
-    * the registered flat names. */
-  private def rewriteSystemNames(sql: String): String =
-    mapOutsideQuotes(sql)(_.replaceAll(
-      "(?i)\\bsystem\\.(tables|columns|databases|queries|snapshots|cdc_log|cdc_subscribers|locks|scans|commit_stats)\\b",
-      "system_$1"))
-
-  private def runSelect(sql0: String, id: String): QueryResult = {
-    val sql = rewriteTimeTravel(sql0)
-    if (SystemTables.isSystemQuery(sql)) {
+  private def runSelect(plan: LogicalPlan, system: Boolean, id: String): QueryResult =
+    if (system) {
       // system-db queries are served from the catalog, not table scans
       // (engine.go:1024-1049 routes them to the registry)
-      SystemTables.register(spark)
-      registerSystemQueries()
-      val r = toResult(id, spark.sql(rewriteSystemNames(sql)))
+      val r = toResult(id, GraftBridge.ofRows(spark, plan))
       r.copy(message =
         s"System query executed successfully, ${r.rowCount} rows returned")
-    } else collectWithTornReadRetry(id, sql)
-  }
+    } else collectWithTornReadRetry(id, plan)
 
   /** Statement-level read coherence. There is no transaction log to
     * version the file set, so a SELECT racing a copy-on-write commit
@@ -999,17 +1002,17 @@ final class QueryEngine(val spark: SparkSession,
     * A bounded FILE_NOT_FOUND retry stays as the backstop for writers
     * OUTSIDE this JVM (another process on the warehouse), which the
     * locks cannot see. */
-  private def collectWithTornReadRetry(id: String, sql: String): QueryResult = {
+  private def collectWithTornReadRetry(id: String, plan: LogicalPlan): QueryResult = {
     var left = 3
     while (true) {
-      try return collectCoherently(id, sql)
+      try return collectCoherently(id, plan)
       catch {
         case e: Exception if left > 1 && isTornRead(e, 0) =>
           left -= 1
           QueryEngine.tornReadRetries.incrementAndGet()
           // best-effort refresh; a concurrent DDL can fail the
           // re-analysis, which must not replace the original error
-          try referencedTables(sql).foreach { q =>
+          try referencedTables(plan).foreach { q =>
             try spark.catalog.refreshTable(q)
             catch { case _: Exception => () }
           } catch { case _: Exception => () }
@@ -1018,11 +1021,11 @@ final class QueryEngine(val spark: SparkSession,
     throw new IllegalStateException("unreachable")
   }
 
-  private def collectCoherently(id: String, sql: String): QueryResult = {
+  private def collectCoherently(id: String, plan: LogicalPlan): QueryResult = {
     // analysis (outside the locks) only DISCOVERS the referenced
     // tables; the listing it may have cached is re-validated under
     // the locks by the version check
-    val tables = referencedTables(sql)
+    val tables = referencedTables(plan)
     // locks are held only through listing refresh + planning + a
     // forced listing of EVERY scan (pinScanListings — planning alone
     // leaves CatalogFileIndex scans unlisted): the plan's file listing
@@ -1032,14 +1035,19 @@ final class QueryEngine(val spark: SparkSession,
     // through a long analytic collection would let one queued writer
     // head-of-line-block every subsequent reader of a hot table for
     // the whole collection (the round-11 advice finding).
-    val df = withReadLocks(tables) {
+    toResult(id, planCoherently(plan, tables))
+  }
+
+  /** The statement's DataFrame, planned under its tables' read locks
+    * after the version-gated listing refresh, with every scan's
+    * listing pinned ([[pinScanListings]]). */
+  private def planCoherently(plan: LogicalPlan, tables: Seq[String]): DataFrame =
+    withReadLocks(tables) {
       tables.foreach(ensureFreshListing)
-      val d = spark.sql(sql)
+      val d = GraftBridge.ofRows(spark, plan)
       pinScanListings(d.queryExecution.executedPlan)
       d
     }
-    toResult(id, df)
-  }
 
   /** Materializes every file-scan's listing while the caller still
     * holds the tables' read locks. Forcing `executedPlan` alone is NOT
@@ -1096,12 +1104,6 @@ final class QueryEngine(val spark: SparkSession,
            e.getMessage.contains("PATH_NOT_FOUND"))) ||
         isTornRead(e.getCause, depth + 1))
 
-  private def runExplain(sql: String, id: String): QueryResult =
-    """(?is)^EXPLAIN\s+SKIPPING\s+(.*)$""".r.findFirstMatchIn(sql) match {
-      case Some(m) => runExplainSkipping(m.group(1), id)
-      case None => toResult(id, spark.sql(sql))
-    }
-
   /** `EXPLAIN SKIPPING <select>` — the file-skipping report for one
     * statement (round-11 verdict "Next #5"): one row per catalog
     * relation with files total / files read / evidence kinds
@@ -1110,14 +1112,8 @@ final class QueryEngine(val spark: SparkSession,
     * Relations the rule had no evidence for report their full listing
     * with evidence 'none'. */
   private def runExplainSkipping(sel: String, id: String): QueryResult = {
-    // sys-function and INDEX_PROBE rewrites already ran in execute();
-    // time travel is a SELECT-path rewrite, applied here
-    val rewritten = rewriteTimeTravel(sel)
-    val tables = referencedTables(rewritten)
-    val plan = withReadLocks(tables) {
-      tables.foreach(ensureFreshListing)
-      spark.sql(rewritten).queryExecution.optimizedPlan
-    }
+    val query = prepare(sel, Map.empty).plan.fold(e => throw e, identity)
+    val plan = planCoherently(query, referencedTables(query)).queryExecution.optimizedPlan
     val rows: Seq[Seq[Any]] = plan.collectWithSubqueries {
       case l: org.apache.spark.sql.execution.datasources.LogicalRelation
           if l.catalogTable.isDefined =>
@@ -1182,8 +1178,8 @@ final class QueryEngine(val spark: SparkSession,
     * subquery plans, which would leave those tables unlocked and
     * never refreshed. Returned qualified and sorted (the lock
     * acquisition order). */
-  private def referencedTables(sql: String): Seq[String] =
-    spark.sql(sql).queryExecution.analyzed.collectWithSubqueries {
+  private def referencedTables(plan: LogicalPlan): Seq[String] =
+    GraftBridge.ofRows(spark, plan).queryExecution.analyzed.collectWithSubqueries {
       case l: org.apache.spark.sql.execution.datasources.LogicalRelation
           if l.catalogTable.isDefined =>
         val ct = l.catalogTable.get
@@ -1282,43 +1278,49 @@ final class QueryEngine(val spark: SparkSession,
       case None => body
     }
 
-  private def runInsert(sql: String, id: String): QueryResult = {
-    val target = insertHeadRe.findFirstMatchIn(sql)
-      .map(_.group(2).replace("`", ""))
-    withTableWriteLock(target) {
+  /** The table a DML statement writes: a plain (possibly qualified)
+    * name — an aliased or derived target is not supported. */
+  private def targetTable(plan: LogicalPlan, what: String): String = plan match {
+    case r: UnresolvedRelation => r.multipartIdentifier.mkString(".")
+    case _ => throw new IllegalArgumentException(
+      s"$what target must be a table name")
+  }
+
+  private def runInsert(stmt: InsertIntoStatement, id: String): QueryResult = {
+    val t = targetTable(stmt.table, "INSERT")
+    withTableWriteLock(Some(t)) {
       // version the pre-insert state: appends delete nothing, so the
       // manifest snapshot costs one file listing and zero archive work —
       // `VERSION AS OF` then covers append history too
       if (Snapshots.enabled(spark) && Snapshots.onInsert(spark))
-        target.foreach(t => Snapshots.create(spark, t, "INSERT"))
-      val df = spark.sql(withDeclaredColumns(sql))
-      val n = writtenRows(df).orElse(valuesRowCount(sql)).getOrElse(-1L)
-      target.foreach(t => registryChanged(t, Changefeed.TableFiles, "INSERT",
-        Map("rows" -> math.max(n, 0).toString)))
+        Snapshots.create(spark, t, "INSERT")
+      val df = GraftBridge.ofRows(spark, withDeclaredColumns(t, stmt))
+      val n = writtenRows(df).orElse(stmt.query match {
+        case l: LocalRelation => Some(l.data.length.toLong)
+        case _ => None
+      }).getOrElse(-1L)
+      registryChanged(t, Changefeed.TableFiles, "INSERT",
+        Map("rows" -> math.max(n, 0).toString))
       QueryResult(id, Seq.empty, Seq.empty, math.max(n, 0),
         if (n >= 0) s"INSERT $n" else "INSERT")
     }
   }
 
-  private val insertHeadRe: Regex =
-    """(?is)^(INSERT\s+(?:INTO|OVERWRITE)\s+(?:TABLE\s+)?([\w.`]+))\s*(.*)$""".r
-
   /** Ranger INSERT semantics bind positional VALUES to the DECLARED
     * column order; Spark's catalog moves partition columns to the end
     * of the schema, so an implicit-column insert into a partitioned
-    * table would bind by the reordered schema. Injecting the declared
-    * list (graft.columns) restores by-name binding. */
-  private def withDeclaredColumns(sql: String): String =
-    insertHeadRe.findFirstMatchIn(sql) match {
-      case Some(m) if !m.group(3).startsWith("(") =>
-        val declared =
-          try tableProps(m.group(2).replace("`", "")).get("graft.columns")
-          catch { case _: Exception => None }
-        declared match {
-          case Some(cols) => s"${m.group(1)} ($cols) ${m.group(3)}"
-          case None => sql
-        }
-      case _ => sql
+    * table would bind by the reordered schema. Setting the declared
+    * list (graft.columns) as the statement's column list restores
+    * by-name binding. */
+  private def withDeclaredColumns(t: String,
+                                  stmt: InsertIntoStatement): InsertIntoStatement =
+    if (stmt.userSpecifiedCols.nonEmpty || stmt.partitionSpec.nonEmpty || stmt.byName) stmt
+    else {
+      val declared =
+        try tableProps(t).get("graft.columns")
+        catch { case _: Exception => None }
+      declared.fold(stmt)(cols =>
+        stmt.copy(userSpecifiedCols = cols.split(",").map(_.trim).toSeq))
     }
 
   /** numOutputRows of the executed write command, if exposed. */
@@ -1328,14 +1330,6 @@ final class QueryEngine(val spark: SparkSession,
         c.commandPhysicalPlan.metrics.get("numOutputRows")
       case p => p.metrics.get("numOutputRows")
     }).map(_.value)
-
-  private val insertValuesRe: Regex =
-    """(?is)^INSERT\s+(?:INTO|OVERWRITE)\s+(?:TABLE\s+)?[\w.`]+\s*(?:\([^)]*\))?\s*VALUES\s*(.*)$""".r
-
-  /** Parsed row-tuple count of an INSERT ... VALUES statement. */
-  private def valuesRowCount(sql: String): Option[Long] =
-    insertValuesRe.findFirstMatchIn(sql).map(m =>
-      IcebergTypes.splitTopLevel(m.group(1)).count(_.startsWith("(")).toLong)
 
   /** Programmatic batch-ingestion API (the native-protocol ClientData
     * path, engine.go:635-684): validate against the table schema with
@@ -1431,11 +1425,6 @@ final class QueryEngine(val spark: SparkSession,
   }
 
   // ------------------------------------------------- UPDATE / DELETE (CoW)
-
-  private val deleteRe: Regex =
-    """(?is)^DELETE\s+FROM\s+([\w.`]+)(?:\s+WHERE\s+(.*))?$""".r
-  private val updateRe: Regex =
-    """(?is)^UPDATE\s+([\w.`]+)\s+SET\s+(.*?)(?:\s+WHERE\s+(.*))?$""".r
 
   /** True when Catalyst proves `df` empty at PLANNING time (its
     * optimized plan folds to an empty LocalRelation). Used to detect
@@ -1711,7 +1700,7 @@ final class QueryEngine(val spark: SparkSession,
       if (!IndexManager.hasSkipEvidence(spark, qualified)) return None
       import org.apache.spark.sql.catalyst.expressions.{And => CAnd, AttributeReference, AttributeSet, Cast => CCast, EqualTo => CEq, Expression}
       val analyzed = spark.table(t).alias(p.tAlias)
-        .join(src.alias(p.sAlias), expr(p.onCond), "inner")
+        .join(src.alias(p.sAlias), p.resolve(p.onCond), "inner")
         .queryExecution.analyzed
       val joinInfo = analyzed.collectFirst {
         case j: org.apache.spark.sql.catalyst.plans.logical.Join
@@ -1785,225 +1774,156 @@ final class QueryEngine(val spark: SparkSession,
     val observed = cand.observe(obs,
       sum(when(matched, 1L).otherwise(0L)).as("matched"))
     fileLevelRewrite(t, parts, scope, shape(observed))
-    obs.get("matched") match {
-      case n: Long => n
-      case n: java.lang.Long => n.longValue()
-      case _ => 0L
+    observedLong(obs, "matched")
+  }
+
+  private def runDelete(stmt: DeleteFromTable, id: String): QueryResult = {
+    val t = targetTable(stmt.table, "DELETE")
+    val condExpr = GraftBridge.column(stmt.condition)
+    val matched = coalesce(condExpr, lit(false))
+    val parts = partitionColumns(t)
+    val n: Long = withTableWriteLock(Some(t)) {
+      if (provablyEmptyPlan(spark.table(t).where(not(matched)))) {
+        // whole-table delete: every row provably matches, so count
+        // once and rewrite to empty — the normal survivors path
+        // would lose its observed count to the plan collapse above
+        val total = spark.table(t).count()
+        if (total > 0) {
+          if (Snapshots.enabled(spark)) Snapshots.create(spark, t, "DELETE")
+          stagedRewrite(t, spark.table(t).limit(0))
+        }
+        total
+      } else copyOnWrite(t, "DELETE", condExpr, rowsMayMove = false,
+          _.where(not(matched))) { affected =>
+        preserveAffected(t, parts, affected)
+        // survivors of ONLY the affected partitions; dynamic overwrite
+        // touches exactly the partitions present in this output.
+        // NULL-predicate rows survive a DELETE (SQL removes only
+        // WHERE-is-TRUE rows), hence the coalesce. The surviving-
+        // partition set is observed DURING the rewrite job itself —
+        // one scan over the affected partitions, not two
+        val obs = new org.apache.spark.sql.Observation()
+        val survivors = spark.table(t)
+          .where(partitionPredicate(parts, affected) && not(matched))
+          .observe(obs, collect_set(struct(parts.map(col): _*)).as("survived"))
+        withDynamicOverwrite(alignForInsert(t, survivors)
+          .write.mode("overwrite").insertInto(t))
+        dropEmptiedPartitions(t, parts, affected, obs)
+      }
     }
+    if (n > 0) registryChanged(t, Changefeed.TableFiles, "DELETE",
+      Map("rows" -> n.toString))
+    QueryResult(id, Seq.empty, Seq.empty, n, s"DELETE $n")
   }
 
-  private def runDelete(sql: String, id: String): QueryResult = sql match {
-    case deleteRe(table, cond) =>
-      val t = table.replace("`", "")
-      val condExpr = Option(cond).map(expr).getOrElse(lit(true))
-      val matched = coalesce(condExpr, lit(false))
-      val parts = partitionColumns(t)
-      val n: Long = withTableWriteLock(Some(t)) {
-        lazy val filteredDf = spark.table(t).where(condExpr)
-        lazy val fScope = zonemapScope(filteredDf)
-        if (provablyEmptyPlan(spark.table(t).where(not(matched)))) {
-          // whole-table delete: every row provably matches, so count
-          // once and rewrite to empty — the normal survivors path
-          // would lose its observed count to the plan collapse above
-          val total = spark.table(t).count()
-          if (total > 0) {
-            if (Snapshots.enabled(spark)) Snapshots.create(spark, t, "DELETE")
-            stagedRewrite(t, spark.table(t).limit(0))
-          }
-          total
-        } else if (parts.nonEmpty && fScope.isDefined) {
-          // FILE-level CoW within partitions (r11): zonemap evidence
-          // narrows a data-column predicate to specific files ACROSS
-          // partition dirs — rewrite those, leave sibling files in the
-          // same partitions untouched (the partition-scoped path
-          // below rewrites whole partitions)
-          val scope = fScope.get
-          if (scope.isEmpty || filteredDf.isEmpty) 0L
-          else {
-            if (Snapshots.enabled(spark)) Snapshots.create(spark, t, "DELETE")
-            try fileLevelDml(t, parts, scope, matched, _.where(not(matched)))
-            catch { case _: FileLevelAbort =>
-              val (survivors, observedN) = withMatchedCount(t, matched,
-                _.where(not(matched)))
-              stagedRewrite(t, survivors)
-              observedN()
-            }
-          }
-        } else if (parts.nonEmpty) {
-          // ONE scoping job gives the affected partitions AND the
-          // matched count (round 2 ran a full-predicate count plus a
-          // separate distinct — two scans; the judge's finding)
-          val scope = scopeAffected(t, parts, condExpr)
-          if (scope.affected.isEmpty) 0L
-          else {
-            if (Snapshots.enabled(spark)) Snapshots.create(spark, t, "DELETE")
-            // a NULL partition value (__HIVE_DEFAULT_PARTITION__) cannot
-            // be addressed by DROP PARTITION — whole-table path
-            val nullParts = scope.affected.exists(r =>
-              (0 until r.length).exists(r.isNullAt))
-            if (!nullParts && !scope.truncated) {
-              preserveAffected(t, parts, scope.affected)
-              val inAffected = partitionPredicate(parts, scope.affected)
-              // survivors of ONLY the affected partitions; dynamic
-              // overwrite touches exactly the partitions present in
-              // this output. NULL-predicate rows survive a DELETE (SQL
-              // removes only WHERE-is-TRUE rows), hence the coalesce.
-              // The surviving-partition set is observed DURING the
-              // rewrite job itself — one scan over the affected
-              // partitions, not two
-              val obs = new org.apache.spark.sql.Observation()
-              val survivors = spark.table(t)
-                .where(inAffected && not(matched))
-                .observe(obs, collect_set(struct(parts.map(col): _*))
-                  .as("survived"))
-              withDynamicOverwrite(alignForInsert(t, survivors)
-                .write.mode("overwrite").insertInto(t))
-              val survivedParts = obs.get("survived") match {
-                case rs: scala.collection.Seq[_] =>
-                  rs.map { case r: Row => r.toSeq }.toSet
-                case _ => Set.empty[Seq[Any]]
-              }
-              dropEmptiedPartitions(t, parts,
-                scope.affected.filterNot(r => survivedParts.contains(r.toSeq)))
-              scope.matchedCount
-            } else {
-              val (survivors, observedN) = withMatchedCount(t, matched,
-                _.where(not(matched)))
-              stagedRewrite(t, survivors)
-              if (scope.truncated) observedN() else scope.matchedCount
-            }
-          }
-        } else {
-          // unpartitioned: a bounded existence probe guards the rewrite
-          // (a DELETE matching nothing must not rewrite the table), then
-          // ONE pass both counts matches and writes survivors
-          if (filteredDf.isEmpty) 0L
-          else {
-            if (Snapshots.enabled(spark)) Snapshots.create(spark, t, "DELETE")
-            fScope match {
-              case Some(scope) if scope.nonEmpty =>
-                // FILE-level CoW: zonemap evidence clears the other
-                // files — they are not read, not rewritten, not moved
-                try fileLevelDml(t, parts, scope, matched, _.where(not(matched)))
-                catch { case _: FileLevelAbort =>
-                  val (survivors, observedN) = withMatchedCount(t, matched,
-                    _.where(not(matched)))
-                  stagedRewrite(t, survivors)
-                  observedN()
-                }
-              case _ =>
-                val (survivors, observedN) = withMatchedCount(t, matched,
-                  _.where(not(matched)))
-                stagedRewrite(t, survivors)
-                observedN()
-            }
-          }
-        }
+  private def runUpdate(stmt: UpdateTable, id: String): QueryResult = {
+    val t = targetTable(stmt.table, "UPDATE")
+    val src = spark.table(t)
+    val assigns = stmt.assignments.map { a =>
+      a.key match {
+        case k: UnresolvedAttribute => k.nameParts.last -> GraftBridge.column(a.value)
+        case other => throw new IllegalArgumentException(s"bad SET target: $other")
       }
-      if (n > 0) registryChanged(t, Changefeed.TableFiles, "DELETE",
-        Map("rows" -> n.toString))
-      QueryResult(id, Seq.empty, Seq.empty, n, s"DELETE $n")
-    case _ => throw new IllegalArgumentException("cannot parse DELETE statement")
+    }
+    val condExpr = stmt.condition.map(GraftBridge.column).getOrElse(lit(true))
+    def applySet(df: DataFrame): DataFrame =
+      assigns.foldLeft(df) { case (d, (c, v)) =>
+        d.withColumn(c, when(condExpr, v.cast(src.schema(c).dataType))
+          .otherwise(col(c)))
+      }
+    val parts = partitionColumns(t)
+    val touchesPartCol = assigns.exists { case (c, _) => parts.contains(c) }
+    val n: Long = withTableWriteLock(Some(t)) {
+      copyOnWrite(t, "UPDATE", condExpr, rowsMayMove = touchesPartCol, applySet) {
+        affected =>
+          preserveAffected(t, parts, affected)
+          val updated = applySet(spark.table(t).where(partitionPredicate(parts, affected)))
+          withDynamicOverwrite(alignForInsert(t, updated)
+            .write.mode("overwrite").insertInto(t))
+      }
+    }
+    if (n > 0) registryChanged(t, Changefeed.TableFiles, "UPDATE",
+      Map("rows" -> n.toString))
+    QueryResult(id, Seq.empty, Seq.empty, n, s"UPDATE $n")
   }
 
-  private def runUpdate(sql: String, id: String): QueryResult = sql match {
-    case updateRe(table, setList, cond) =>
-      val t = table.replace("`", "")
-      val src = spark.table(t)
-      val assigns = IcebergTypes.splitTopLevel(setList).map { a =>
-        a.split("=", 2) match {
-          case Array(c, v) => c.trim.replace("`", "") -> v.trim
-          case _ => throw new IllegalArgumentException(s"bad SET clause: '$a'")
-        }
-      }
-      val condExpr = Option(cond).map(expr).getOrElse(lit(true))
-      val matched = coalesce(condExpr, lit(false))
-      def applySet(df: DataFrame): DataFrame =
-        assigns.foldLeft(df) { case (d, (c, v)) =>
-          d.withColumn(c, when(condExpr, expr(v).cast(src.schema(c).dataType))
-            .otherwise(col(c)))
-        }
-      val parts = partitionColumns(t)
-      // an UPDATE that rewrites a partition column can MOVE rows
-      // between partitions; dynamic overwrite would then replace the
-      // destination partition with only the moved rows — those
-      // statements take the whole-table path
-      val touchesPartCol = assigns.exists { case (c, _) => parts.contains(c) }
-      val n: Long = withTableWriteLock(Some(t)) {
-        // an UPDATE rewriting a partition column can MOVE rows across
-        // partition dirs — only the whole-table path handles that
-        lazy val filteredDf = spark.table(t).where(condExpr)
-        lazy val fScope =
-          if (touchesPartCol) None else zonemapScope(filteredDf)
-        if (parts.nonEmpty && fScope.isDefined) {
-          // FILE-level CoW within partitions (r11): only files that
-          // can hold matched rows are rewritten with SET applied
-          val scope = fScope.get
-          if (scope.isEmpty || filteredDf.isEmpty) 0L
-          else {
-            if (Snapshots.enabled(spark)) Snapshots.create(spark, t, "UPDATE")
-            try fileLevelDml(t, parts, scope, matched, applySet)
-            catch { case _: FileLevelAbort =>
-              val (df, observedN) = withMatchedCount(t, matched, applySet)
-              stagedRewrite(t, df)
-              observedN()
-            }
-          }
-        } else if (parts.nonEmpty) {
-          // one scoping job: affected partitions + matched count
-          val scope = scopeAffected(t, parts, condExpr)
-          if (scope.affected.isEmpty) 0L
-          else {
-            if (Snapshots.enabled(spark)) Snapshots.create(spark, t, "UPDATE")
-            if (!touchesPartCol && !scope.truncated) {
-              preserveAffected(t, parts, scope.affected)
-              val inAffected = partitionPredicate(parts, scope.affected)
-              val updated = applySet(spark.table(t).where(inAffected))
-              withDynamicOverwrite(alignForInsert(t, updated)
-                .write.mode("overwrite").insertInto(t))
-              scope.matchedCount
-            } else {
-              val (df, observedN) = withMatchedCount(t, matched, applySet)
-              stagedRewrite(t, df)
-              if (scope.truncated) observedN() else scope.matchedCount
-            }
-          }
+  /** Copy-on-write commit shared by UPDATE and DELETE, run under the
+    * table's write lock: `shape` turns a slice of the table into its
+    * replacement (SET applied / matched rows dropped). Scope, finest
+    * first:
+    *   - FILE level (r11), when zonemap evidence narrows the condition
+    *     to specific files — across partition dirs too; sibling files
+    *     are not read, rewritten or moved;
+    *   - partition level, for partitioned tables: ONE scoping job gives
+    *     the affected partitions AND the matched count (round 2 ran a
+    *     full-predicate count plus a separate distinct — two scans; the
+    *     judge's finding); `rewritePartitions` rewrites them. A NULL
+    *     partition value (__HIVE_DEFAULT_PARTITION__) cannot be
+    *     addressed by DROP PARTITION, so such a scope takes the
+    *     whole-table path, as MERGE's does;
+    *   - the whole table, counting matches in the rewrite job itself.
+    * `rowsMayMove` (an UPDATE that sets a partition column) skips the
+    * file and partition levels: dynamic overwrite would replace the
+    * destination partition with only the moved rows, and a file-level
+    * commit would stage rows into other partitions' dirs. A statement
+    * matching nothing rewrites nothing and takes no snapshot. Returns
+    * the matched-row count. */
+  private def copyOnWrite(t: String, verb: String, condExpr: Column,
+                          rowsMayMove: Boolean, shape: DataFrame => DataFrame)
+                         (rewritePartitions: Seq[Row] => Unit): Long = {
+    val matched = coalesce(condExpr, lit(false))
+    val parts = partitionColumns(t)
+    def snapshot(): Unit =
+      if (Snapshots.enabled(spark)) Snapshots.create(spark, t, verb)
+    def wholeTable(): Long = {
+      val obs = new org.apache.spark.sql.Observation()
+      stagedRewrite(t, shape(spark.table(t)
+        .observe(obs, sum(when(matched, 1L).otherwise(0L)).as("matched"))))
+      observedLong(obs, "matched")
+    }
+    val filteredDf = spark.table(t).where(condExpr)
+    val fScope = if (rowsMayMove) None else zonemapScope(filteredDf)
+    if (parts.nonEmpty && fScope.isEmpty) {
+      val scope = scopeAffected(t, parts, condExpr)
+      if (scope.affected.isEmpty) 0L
+      else {
+        snapshot()
+        if (!rowsMayMove && !scope.truncated &&
+            !scope.affected.exists(r => (0 until r.length).exists(r.isNullAt))) {
+          rewritePartitions(scope.affected)
+          scope.matchedCount
         } else {
-          if (filteredDf.isEmpty) 0L
-          else {
-            if (Snapshots.enabled(spark)) Snapshots.create(spark, t, "UPDATE")
-            fScope match {
-              case Some(scope) if scope.nonEmpty =>
-                // FILE-level CoW: only files that can hold matched
-                // rows are rewritten (SET applied); the rest stay
-                try fileLevelDml(t, parts, scope, matched, applySet)
-                catch { case _: FileLevelAbort =>
-                  val (df, observedN) = withMatchedCount(t, matched, applySet)
-                  stagedRewrite(t, df)
-                  observedN()
-                }
-              case _ =>
-                val (df, observedN) = withMatchedCount(t, matched, applySet)
-                stagedRewrite(t, df)
-                observedN()
-            }
-          }
+          val n = wholeTable()
+          if (scope.truncated) n else scope.matchedCount
         }
       }
-      if (n > 0) registryChanged(t, Changefeed.TableFiles, "UPDATE",
-        Map("rows" -> n.toString))
-      QueryResult(id, Seq.empty, Seq.empty, n, s"UPDATE $n")
-    case _ => throw new IllegalArgumentException("cannot parse UPDATE statement")
+    } else if (fScope.exists(_.isEmpty) || filteredDf.isEmpty) 0L
+    else {
+      snapshot()
+      fScope match {
+        case Some(scope) =>
+          try fileLevelDml(t, parts, scope, matched, shape)
+          catch { case _: FileLevelAbort => wholeTable() }
+        case None => wholeTable()
+      }
+    }
   }
 
   /** MERGE INTO (upsert) — parsing/planning in [[MergeInto]]; this
     * wires the engine contract around it: write lock, ANSI multi-match
     * guard as a bounded pre-job, empty-source fast path (no rewrite),
     * snapshot, staged CoW rewrite, changefeed, observed counts. */
-  private def runMerge(sql: String, id: String): QueryResult = {
+  private def runMerge(sql: String, params: Map[String, Any], id: String): QueryResult = {
+    // fragments and a subquery source resolve as every statement
+    // does: SYS_* functions, bound parameters, graft's table functions
     val parsed = MergeInto.parse(sql).getOrElse(
       throw new IllegalArgumentException("cannot parse MERGE statement"))
-    executeMerge(parsed, id, None)
+      .copy(resolve = f => GraftBridge.column(
+        bind(spark.sessionState.sqlParser.parseExpression(f), params)))
+    val source =
+      if (parsed.sourceIsQuery) Some(GraftBridge.ofRows(spark, queryPlan(parsed.source, params)))
+      else None
+    executeMerge(parsed, id, source)
   }
 
   /** Programmatic upsert: UPDATE every non-key column on key match,
@@ -2059,11 +1979,7 @@ final class QueryEngine(val spark: SparkSession,
         val obs = org.apache.spark.sql.Observation()
         batch.select(ordered: _*).observe(obs, count(lit(1)).as("n"))
           .write.insertInto(t)
-        val n = obs.get("n") match {
-          case x: Long => x
-          case x: java.lang.Long => x.longValue()
-          case _ => 0L
-        }
+        val n = observedLong(obs, "n")
         // the batch DataFrame is bound to the CALLER's session (a
         // foreachBatch micro-batch session is a clone): the write
         // refreshed THAT session's file index, not this engine's —
@@ -2095,12 +2011,6 @@ final class QueryEngine(val spark: SparkSession,
             .collectWithSubqueries { case n => n }
             .forall(_.expressions.forall(_.deterministic))) srcRaw0
       else srcRaw0.localCheckpoint()
-    def obsN(obs: org.apache.spark.sql.Observation, k: String): Long =
-      obs.get(k) match {
-        case x: Long => x
-        case x: java.lang.Long => x.longValue()
-        case _ => 0L
-      }
     val parts = partitionColumns(t)
     val hasDelete = parsed.matched.exists(_.sets.isEmpty)
     val touchesPartCol = parsed.matched.exists(_.sets.exists(
@@ -2159,8 +2069,8 @@ final class QueryEngine(val spark: SparkSession,
               val plan = MergeInto.plan(spark, parsed, declaredOrder,
                 Some(srcRaw), targetOverride = Some(cand))
               fileLevelRewrite(t, parts, scope, plan.result)
-              Some((obsN(plan.obs, "updated"), obsN(plan.obs, "deleted"),
-                obsN(plan.obs, "inserted")))
+              Some((observedLong(plan.obs, "updated"), observedLong(plan.obs, "deleted"),
+                observedLong(plan.obs, "inserted")))
             } catch { case _: FileLevelAbort => None }
         }
         if (fileLevelResult.isDefined) fileLevelResult.get
@@ -2169,7 +2079,7 @@ final class QueryEngine(val spark: SparkSession,
           if (parts.isEmpty || touchesPartCol || !pruneEnabled) None
           else {
             val rows = spark.table(t).alias(parsed.tAlias)
-              .join(srcRaw.alias(parsed.sAlias), expr(parsed.onCond), "left_semi")
+              .join(srcRaw.alias(parsed.sAlias), parsed.resolve(parsed.onCond), "left_semi")
               .groupBy(parts.map(col): _*).agg(count(lit(1)).as("__cnt"))
               .limit(MaxPrunedPartitions + 1).collect().toSeq
               .map(r => Row.fromSeq(r.toSeq.dropRight(1)))
@@ -2208,29 +2118,21 @@ final class QueryEngine(val spark: SparkSession,
                   .write.mode("overwrite").insertInto(t))
                 // a DELETE clause can empty a partition: no output row
                 // overwrote it, so drop affected-minus-survived
-                pruned.obsParts.foreach { o =>
-                  val survivedParts = o.get("survived") match {
-                    case rs: scala.collection.Seq[_] =>
-                      rs.map { case r: Row => r.toSeq }.toSet
-                    case _ => Set.empty[Seq[Any]]
-                  }
-                  dropEmptiedPartitions(t, parts,
-                    affected.filterNot(r => survivedParts.contains(r.toSeq)))
-                }
-                (obsN(pruned.obsUpdated, "updated"),
-                 obsN(pruned.obsUpdated, "deleted"))
+                pruned.obsParts.foreach(dropEmptiedPartitions(t, parts, affected, _))
+                (observedLong(pruned.obsUpdated, "updated"),
+                 observedLong(pruned.obsUpdated, "deleted"))
               }
             alignForInsert(t, insertsDf)
               .write.mode("append").insertInto(t)
-            (updated, deleted, obsN(pruned.obsInserted, "inserted"))
+            (updated, deleted, observedLong(pruned.obsInserted, "inserted"))
           case None =>
             guardDups(None)
             val plan = MergeInto.plan(spark, parsed, declaredOrder,
               Some(srcRaw))
             snapOnce()
             stagedRewrite(t, plan.result)
-            (obsN(plan.obs, "updated"), obsN(plan.obs, "deleted"),
-             obsN(plan.obs, "inserted"))
+            (observedLong(plan.obs, "updated"), observedLong(plan.obs, "deleted"),
+             observedLong(plan.obs, "inserted"))
         }
         }
       }
@@ -2301,24 +2203,14 @@ final class QueryEngine(val spark: SparkSession,
       truncated)
   }
 
-  /** Pass the table through an observed matched-row counter, then
-    * `shape` it — the count comes out of the SAME job that executes
-    * the rewrite (runInsert's numOutputRows idea, via CollectMetrics),
-    * so no separate counting scan runs. */
-  private def withMatchedCount(t: String,
-                               matched: org.apache.spark.sql.Column,
-                               shape: DataFrame => DataFrame)
-      : (DataFrame, () => Long) = {
-    val obs = new org.apache.spark.sql.Observation()
-    val observed = spark.table(t)
-      .observe(obs, sum(when(matched, 1L).otherwise(0L)).as("matched"))
-    (shape(observed),
-      () => obs.get("matched") match {
-        case n: Long => n
-        case n: java.lang.Long => n.longValue()
-        case _ => 0L
-      })
-  }
+  /** A count an [[org.apache.spark.sql.Observation]] collected during
+    * the job that ran (0 when the job produced no metric row). */
+  private def observedLong(obs: org.apache.spark.sql.Observation, key: String): Long =
+    obs.get(key) match {
+      case n: Long => n
+      case n: java.lang.Long => n.longValue()
+      case _ => 0L
+    }
 
   /** Archive-preserve the files of the affected partitions before the
     * pruned overwrite deletes them (copy — the overwrite still reads
@@ -2363,22 +2255,29 @@ final class QueryEngine(val spark: SparkSession,
   }
 
   /** Partitions whose rows were ALL deleted produce no output rows, so
-    * dynamic overwrite leaves them untouched — drop them explicitly. */
-  private def dropEmptiedPartitions(t: String, parts: Seq[String],
-                                    emptied: Seq[Row]): Unit =
-    emptied.foreach { r =>
-      val spec = parts.zipWithIndex.map { case (p, i) =>
-        s"`$p`=${sqlLiteral(r.get(i))}"
-      }.mkString(", ")
-      spark.sql(s"ALTER TABLE $t DROP IF EXISTS PARTITION ($spec)")
+    * dynamic overwrite leaves them untouched — drop the `affected` ones
+    * missing from the `survived` set the rewrite job observed. The drop
+    * command takes each value as its string form (a value cast to
+    * string, as a partition spec in SQL text would be), never as
+    * statement text; it drops the data and refreshes the table. */
+  private def dropEmptiedPartitions(t: String, parts: Seq[String], affected: Seq[Row],
+                                    survived: org.apache.spark.sql.Observation): Unit = {
+    val kept = survived.get("survived") match {
+      case rs: scala.collection.Seq[_] => rs.map { case r: Row => r.toSeq }.toSet
+      case _ => Set.empty[Seq[Any]]
     }
-
-  private def sqlLiteral(v: Any): String = v match {
-    case null => "NULL"
-    case s: String => "'" + s.replace("'", "''") + "'"
-    case d: java.sql.Date => s"DATE'$d'"
-    case t: java.sql.Timestamp => s"TIMESTAMP'$t'"
-    case other => other.toString
+    val emptied = affected.filterNot(r => kept.contains(r.toSeq))
+    if (emptied.nonEmpty) {
+      import org.apache.spark.sql.catalyst.expressions.Cast
+      val tz = Some(spark.conf.get("spark.sql.session.timeZone"))
+      val specs = emptied.map(r => parts.zipWithIndex.map { case (p, i) =>
+        p -> String.valueOf(Cast(Literal(r.get(i)),
+          org.apache.spark.sql.types.StringType, tz).eval())
+      }.toMap)
+      GraftBridge.ofRows(spark,
+        org.apache.spark.sql.execution.command.AlterTableDropPartitionCommand(
+          tableIdent(t), specs, ifExists = true, purge = false, retainData = false))
+    }
   }
 
   /** Whole-table copy-on-write with durable staging: survivors land in

@@ -24,11 +24,13 @@ import org.apache.spark.sql.types._
   */
 object SystemTables {
 
-  /** The reference's detection heuristic (manager.go:302-308). */
-  def isSystemQuery(sql: String): Boolean = {
-    val u = sql.trim.toUpperCase
-    u.contains("SYSTEM.") || u.contains("FROM SYSTEM") || u.contains("JOIN SYSTEM")
-  }
+  /** The system views. The reference addresses them as
+    * `system.<view>` (system_database_test.go:199-204); Spark temp
+    * views cannot carry the qualifier, so they register as
+    * `system_<view>` and the engine resolves the dotted spelling to
+    * those names. */
+  val views: Set[String] = Set("tables", "columns", "databases", "queries",
+    "snapshots", "cdc_log", "cdc_subscribers", "locks", "scans", "commit_stats")
 
   // metadata cache: warehouse -> (db.table -> CatalogTable); shared
   // across connection engines (they share the external catalog)

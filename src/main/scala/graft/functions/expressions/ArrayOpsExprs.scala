@@ -635,8 +635,9 @@ object ArrayOpsImpl {
 
   /** See [[BandKeysExpr]]. Matches the HOF's semantics exactly:
     * slice is 1-based and clamps at the array end; cast(long) is
-    * Long.toString; concat_ws skips null elements (minhash signatures
-    * never contain them, but the spec pin covers short arrays). */
+    * Long.toString; concat_ws skips null elements and their separator
+    * (minhash signatures never contain them; the spec pin covers both
+    * edges). */
   def bandKeys(mh: ArrayData, numBands: Int, rowsPerBand: Int): ArrayData = {
     val n = mh.numElements()
     val out = new Array[AnyRef](numBands)
@@ -648,8 +649,10 @@ object ArrayOpsImpl {
       val to = math.min(from + rowsPerBand, n)
       var i = from
       while (i < to) {
-        if (i > from) sb.append('_')
-        sb.append(mh.getLong(i))
+        if (!mh.isNullAt(i)) {
+          if (sb.length > 0) sb.append('_')
+          sb.append(mh.getLong(i))
+        }
         i += 1
       }
       out(b) = org.apache.spark.unsafe.types.UTF8String.fromString(sb.toString)

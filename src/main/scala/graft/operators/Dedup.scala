@@ -717,25 +717,6 @@ object Dedup {
             .sortedHashes(col("sh")))
           .transform(cacheOnce))
 
-  // probe accessors (graft.tools.StageCost): sub-pipeline slices of
-  // the q33 shape so per-task constants can be attributed
-  private[graft] def shingleBaseForProbe(s: SparkSession, dir: String)
-      : DataFrame = shingleBase(s, dir)
-  private[graft] def bandsForProbe(s: SparkSession, dir: String,
-      numBands: Int): DataFrame = {
-    val rowsPerBand = NumHashes / numBands
-    shingleBase(s, dir).select(
-      col("doc_id"),
-      posexplode(Text.lshBandKeys(col("mh"), numBands, rowsPerBand))
-        .as(Seq("band", "bh")))
-  }
-  private[graft] def bucketsForProbe(s: SparkSession, dir: String,
-      numBands: Int): DataFrame =
-    bandsForProbe(s, dir, numBands).groupBy(col("band"), col("bh"))
-      .agg(graft.functions.expressions.CappedLongsAgg
-        .cappedLongs(col("doc_id"), BucketCap + 1).as("ids"))
-      .where(size(col("ids")).between(2, BucketCap))
-
   /** LSH candidate pairs from the scan path: band keys computed from
     * the corpus, then bucket-local capped pair generation. */
   private[graft] def lshCandidatePairs(s: SparkSession, dir: String,

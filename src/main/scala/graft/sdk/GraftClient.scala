@@ -184,7 +184,9 @@ final class GraftClient private[sdk] (opt: GraftClient.Options) {
     case null => "NULL"
     case None => "NULL"
     case Some(x) => renderArg(x)
-    case s: String => "'" + s.replace("'", "''") + "'"
+    // Spark's lexer reads backslash as an escape inside a literal, so
+    // it is doubled along with the quote
+    case s: String => "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
     case b: Boolean => b.toString
     case d: java.sql.Date => s"DATE'$d'"
     case t: java.sql.Timestamp => s"TIMESTAMP'$t'"

@@ -105,7 +105,7 @@ final class PgWireServer(engine: QueryEngine, port: Int = 2848,
     // bare acks, handler.go:163-201; here Parse/Bind/Execute actually
     // run — prepared statements work from a stock JDBC driver)
     val statements = scala.collection.mutable.Map[String, String]()
-    val portals = scala.collection.mutable.Map[String, String]()
+    val portals = scala.collection.mutable.Map[String, Portal]()
     val portalResults =
       scala.collection.mutable.Map[String, QueryEngine#QueryResult]()
     try {
@@ -139,7 +139,7 @@ final class PgWireServer(engine: QueryEngine, port: Int = 2848,
             val (sql, _) = cString(payload, p1)
             statements(name) = sql
             message(out, '1', _ => ()) // ParseComplete
-          case 'B' => // Bind: substitute $n parameters into a portal
+          case 'B' => // Bind: a portal of the statement and its parameters
             try {
               val bound = bind(payload, statements)
               portals(bound._1) = bound._2
@@ -189,11 +189,14 @@ final class PgWireServer(engine: QueryEngine, port: Int = 2848,
     }
   }
 
-  /** Bind payload → (portalName, sql-with-substituted-params).
-    * Text-format values only; numeric-looking values inline bare,
-    * everything else as a quoted literal. */
+  /** A bound portal: the statement with `$n` rewritten to the named
+    * marker `:pn`, and the values the engine binds to those markers as
+    * typed literals — a value never becomes statement text. */
+  private final case class Portal(sql: String, params: Map[String, Any])
+
+  /** Bind payload → (portalName, portal). Text-format values only. */
   private def bind(payload: Array[Byte],
-                   statements: scala.collection.Map[String, String]): (String, String) = {
+                   statements: scala.collection.Map[String, String]): (String, Portal) = {
     val c = new java.io.DataInputStream(new java.io.ByteArrayInputStream(payload))
     def cstr(): String = {
       val b = new java.io.ByteArrayOutputStream()
@@ -216,8 +219,8 @@ final class PgWireServer(engine: QueryEngine, port: Int = 2848,
       }
     }
     // single pass over the text, skipping single-quoted literals AND
-    // double-quoted identifiers: injected values are never re-scanned,
-    // $n inside quotes stays data, and $12 can never half-match $1
+    // double-quoted identifiers: $n inside quotes stays data, and $12
+    // can never half-match $1
     val out = new StringBuilder
     var i = 0
     def skipQuoted(q: Char): Unit = {
@@ -233,46 +236,48 @@ final class PgWireServer(engine: QueryEngine, port: Int = 2848,
     }
     while (i < sql.length) {
       val c = sql.charAt(i)
-      if (c == '"') skipQuoted('"')
-      else if (c == '\'') {
-        var j = i + 1
-        var closed = false
-        while (j < sql.length && !closed) {
-          if (sql.charAt(j) == '\'') {
-            if (j + 1 < sql.length && sql.charAt(j + 1) == '\'') j += 2
-            else { j += 1; closed = true }
-          } else j += 1
-        }
-        out.append(sql.substring(i, j)); i = j
-      } else if (c == '$' && i + 1 < sql.length && sql.charAt(i + 1).isDigit) {
+      if (c == '"' || c == '\'') skipQuoted(c)
+      else if (c == '$' && i + 1 < sql.length && sql.charAt(i + 1).isDigit) {
         var j = i + 1
         while (j < sql.length && sql.charAt(j).isDigit) j += 1
         // digit runs beyond 9 chars are literal text, not a parameter
         val idx = if (j - i - 1 <= 9) sql.substring(i + 1, j).toInt else -1
         if (idx >= 1 && idx <= values.length) {
-          out.append(literal(values(idx - 1))); i = j
+          out.append(s":p$idx"); i = j
         } else { out.append(c); i += 1 }
       } else { out.append(c); i += 1 }
     }
-    (portal, out.toString)
+    (portal, Portal(out.toString, values.zipWithIndex.map { case (v, i) =>
+      s"p${i + 1}" -> paramValue(v) }.toMap))
   }
 
-  private def literal(v: String): String =
-    if (v == null) "NULL"
-    else if (v.matches("[+-]?\\d+(\\.\\d+)?([eE][+-]?\\d+)?")) v
-    else "'" + v.replace("'", "''") + "'"
+  /** A text-format parameter value typed as Spark types the same text
+    * as a SQL literal: integers as INT (BIGINT, then DECIMAL when too
+    * wide), plain decimals as DECIMAL, exponent forms as DOUBLE;
+    * anything else is a string. */
+  private def paramValue(v: String): Any =
+    if (v == null) null
+    else if (v.matches("[+-]?\\d+")) {
+      val b = BigInt(v)
+      if (b.isValidInt) b.toInt
+      else if (b.isValidLong) b.toLong
+      else new java.math.BigDecimal(b.bigInteger)
+    }
+    else if (v.matches("[+-]?\\d+\\.\\d+")) new java.math.BigDecimal(v)
+    else if (v.matches("[+-]?\\d+(\\.\\d+)?[eE][+-]?\\d+")) v.toDouble
+    else v
 
   private def paramCount(sql: String): Int =
     "\\$(\\d+)".r.findAllMatchIn(sql).map(_.group(1).toInt).maxOption.getOrElse(0)
 
   private def describePortal(engine: QueryEngine, out: DataOutputStream, name: String,
-      portals: scala.collection.Map[String, String],
+      portals: scala.collection.Map[String, Portal],
       cache: scala.collection.mutable.Map[String, QueryEngine#QueryResult]): Unit =
     portals.get(name) match {
       case None => errorResponse(out, "34000", s"unknown portal '$name'")
-      case Some(sql) =>
+      case Some(p) =>
         try {
-          val res = cache.getOrElseUpdate(name, engine.execute(sql))
+          val res = cache.getOrElseUpdate(name, engine.execute(p.sql, params = p.params))
           if (res.columns.nonEmpty) rowDescription(out, res.columns)
           else message(out, 'n', _ => ())
         } catch {
@@ -283,16 +288,16 @@ final class PgWireServer(engine: QueryEngine, port: Int = 2848,
     }
 
   private def executePortal(engine: QueryEngine, out: DataOutputStream, name: String,
-      portals: scala.collection.Map[String, String],
+      portals: scala.collection.Map[String, Portal],
       cache: scala.collection.mutable.Map[String, QueryEngine#QueryResult]): Unit =
     portals.get(name) match {
       case None => errorResponse(out, "34000", s"unknown portal '$name'")
-      case Some(sql) =>
+      case Some(p) =>
         try {
-          val res = cache.getOrElseUpdate(name, engine.execute(sql))
+          val res = cache.getOrElseUpdate(name, engine.execute(p.sql, params = p.params))
           cache.remove(name) // portal is consumed by execution
           res.data.foreach(dataRow(out, _))
-          commandComplete(out, tag(sql, res.rowCount))
+          commandComplete(out, tag(p.sql, res.rowCount))
         } catch {
           case NonFatal(e) =>
             errorResponse(out, "XX000",

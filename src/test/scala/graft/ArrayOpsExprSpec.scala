@@ -149,10 +149,13 @@ class ArrayOpsExprSpec extends AnyFunSuite {
     // r17 kernel pin: identical strings, identical order, incl. the
     // clamped short-array edge (slice past the end yields fewer rows)
     val rnd = new scala.util.Random(19)
+    // null elements: concat_ws skips them and their separator
+    val nulls = Seq(1).toDF("x").select(
+      expr("array(CAST(NULL AS BIGINT), 5L, CAST(NULL AS BIGINT), 6L)").as("mh"))
     val cases = (Seq(Seq.empty[Long], Seq(7L), Seq(1L, 2L, 3L)) ++
       (1 to 30).map { _ =>
         (0 until 32).map(_ => rnd.nextLong(1L << 56)).toSeq
-      }).toDF("mh")
+      }).toDF("mh").union(nulls)
     for ((nb, rpb) <- Seq((32, 1), (16, 2), (8, 4))) {
       val both = cases.select(
         ArrayOps.bandKeys(col("mh"), nb, rpb).as("native"),
@@ -162,6 +165,10 @@ class ArrayOpsExprSpec extends AnyFunSuite {
           s"nb=$nb rpb=$rpb")
       }
     }
+    assert(nulls.select(ArrayOps.bandKeys(col("mh"), 2, 2)).head().getSeq[String](0) ==
+      Seq("5", "6"))
+    assert(nulls.select(ArrayOps.bandKeys(col("mh"), 1, 4)).head().getSeq[String](0) ==
+      Seq("5_6"))
   }
 
   test("removeRuns null tokens follow concat_ws: skipped, no separator") {

@@ -256,4 +256,36 @@ class MergeSpec extends AnyFunSuite {
     assert(rows("SELECT count(*) AS n FROM mrg.te WHERE region = 'us'") ==
       Seq(List(0L)))
   }
+
+  test("SYS_* functions resolve in SET and VALUES fragments") {
+    freshTable("tf")
+    val r = engine.execute(
+      """MERGE INTO mrg.tf t
+        |USING (VALUES (2), (7)) AS s(id)
+        |ON t.id = s.id
+        |WHEN MATCHED THEN UPDATE SET name = GENERATE_UUID
+        |WHEN NOT MATCHED THEN INSERT (id, name) VALUES (s.id, CAST(SYS_TIMESTAMP AS STRING))""".stripMargin)
+    assert(r.message == "MERGE 1 updated, 0 deleted, 1 inserted")
+    // a uuid for the updated row, a timestamp's text for the inserted one
+    assert(rows("SELECT id, length(name) = 36, try_cast(name AS TIMESTAMP) IS NOT NULL " +
+      "FROM mrg.tf WHERE id IN (2, 7) ORDER BY id") ==
+      Seq(List(2L, true, false), List(7L, false, true)))
+  }
+
+  test("an INDEX_PROBE subquery source resolves like any query's") {
+    freshTable("tp")
+    engine.execute("DROP TABLE IF EXISTS mrg.docs")
+    engine.execute("CREATE TABLE mrg.docs (doc_id int64, text string) STORAGE filesystem")
+    engine.execute("INSERT INTO mrg.docs VALUES " +
+      "(1, 'the quick brown fox'), (2, 'a lazy dog'), (3, 'fox and hound')")
+    val r = engine.execute(
+      """MERGE INTO mrg.tp t
+        |USING (SELECT doc_id AS id FROM INDEX_PROBE(mrg.docs, 'bm25', doc_id, text, 'fox', 5)) AS s
+        |ON t.id = s.id
+        |WHEN MATCHED THEN UPDATE SET qty = 0""".stripMargin)
+    assert(r.message == "MERGE 2 updated, 0 deleted, 0 inserted")
+    assert(rows("SELECT id, qty FROM mrg.tp ORDER BY id") == Seq(
+      List(1L, 0L), List(2L, 20L), List(3L, 0L)))
+    engine.execute("DROP TABLE mrg.docs")
+  }
 }

@@ -228,6 +228,44 @@ class PgWireSpec extends AnyFunSuite {
     msg('S', _ => ())
     val flow2 = drain()
     assert(rowValues(flow2.find(_._1 == 'D').get._2).head == null)
+    // values bind as literals, never as text: spliced in, the `\`
+    // escaped its closing quote and ` OR true --` matched all 10 rows
+    msg('P', d => { cz(d, "s3"); cz(d, "SELECT id FROM range(10) WHERE " +
+      "CAST(id AS STRING) = $1 AND CAST(id AS STRING) = $2"); d.writeShort(0) })
+    msg('B', d => {
+      cz(d, "p4"); cz(d, "s3")
+      d.writeShort(0); d.writeShort(2)
+      d.writeInt(1); d.write("\\".getBytes(UTF_8))
+      val inj = " OR true --".getBytes(UTF_8)
+      d.writeInt(inj.length); d.write(inj)
+      d.writeShort(0)
+    })
+    msg('E', d => { cz(d, "p4"); d.writeInt(0) })
+    msg('S', _ => ())
+    val flow4 = drain()
+    assert(!flow4.exists(_._1 == 'D'), "injected parameters matched rows")
+    assert(cstr(flow4.find(_._1 == 'C').get._2) == "SELECT 0")
+    // the search terms and k of a table function bind as well
+    c.query("CREATE DATABASE IF NOT EXISTS pgwx")
+    c.query("DROP TABLE IF EXISTS pgwx.docs")
+    c.query("CREATE TABLE pgwx.docs (doc_id int64, text string) STORAGE filesystem")
+    c.query("INSERT INTO pgwx.docs VALUES (1, 'the quick brown fox'), " +
+      "(2, 'a lazy dog'), (3, 'fox and hound')")
+    msg('P', d => { cz(d, "s4"); cz(d, "SELECT doc_id FROM " +
+      "INDEX_PROBE(pgwx.docs, 'bm25', doc_id, text, $1, $2) ORDER BY doc_id"); d.writeShort(0) })
+    msg('B', d => {
+      cz(d, "p5"); cz(d, "s4")
+      d.writeShort(0); d.writeShort(2)
+      d.writeInt(3); d.write("fox".getBytes(UTF_8))
+      d.writeInt(1); d.write("5".getBytes(UTF_8))
+      d.writeShort(0)
+    })
+    msg('E', d => { cz(d, "p5"); d.writeInt(0) })
+    msg('S', _ => ())
+    val flow5 = drain()
+    assert(flow5.filter(_._1 == 'D').map(m => rowValues(m._2)) == Seq(Seq("1"), Seq("3")),
+      s"got ${flow5.map(_._1)}")
+    c.query("DROP TABLE pgwx.docs")
     sock.close()
     c.close()
   }

@@ -49,6 +49,9 @@ class SdkClientSpec extends AnyFunSuite {
       client.query("SELECT ? AS a", 1L, 2L))
     assertThrows[IllegalArgumentException](
       client.query("SELECT ? + ? AS a", 1L))
+    // a backslash cannot escape its literal's closing quote
+    assert(client.query("SELECT id FROM range(10) WHERE CAST(id AS STRING) = ? " +
+      "AND CAST(id AS STRING) = ?", "\\", " OR true --").rows.isEmpty)
     assert(client.serverVersion().startsWith("Graft Server"))
     client.exec("DROP TABLE sdk.bindt")
   }
